@@ -382,13 +382,15 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-3 rounds in practice; for unknown/large diameters use the
     O(log n)-round alternating variant
     (:func:`streamclient_spark.scale.connected_components_star`,
-    tested equal to this query's labels). The driver-side loop is
-    control flow only (a convergence count per round) — all data
-    stays distributed.
+    tested equal to this query's labels). The rounds run on
+    :func:`streamclient_spark.scale.fixpoint` — all data stays
+    distributed.
 
     The oracle computes the same components by recursive transitive
     closure, which is only viable because components are small — the
     propagation formulation is the one that scales."""
+    from streamclient_spark.scale import fixpoint
+
     release_managed()
     # persist BEFORE the symmetric union: both union branches reference
     # the pair subtree, which would otherwise run the whole LSH+verify
@@ -401,42 +403,27 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
             "src", "dst"
         )
     )
-    labels = (
+    init = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)  # materialized by round 1's sum
     )
-    while True:
+
+    def propagate(labels: DataFrame, _r: int) -> DataFrame:
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")
             .agg(F.min("label").alias("nmin"))
         )
-        # the changed flag rides on the update row itself (nmin < label
-        # ⟺ this round lowered the node's label), so convergence is one
-        # tiny aggregate over the checkpointed frame — not a second
-        # O(nodes) self-join per round. r12: the checkpoint is LAZY
-        # and the chg sum below doubles as its materializer (a global
-        # aggregate over every partition — the star-CC device; one job
-        # per round instead of two)
-        updated = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nmin", F.col("label"))
-                ).alias("label"),
-                (F.coalesce("nmin", F.col("label")) < F.col("label"))
-                .cast("int")
-                .alias("chg"),
-            )
-            .localCheckpoint(eager=False)
+        return labels.join(
+            neighbor_min, labels.node == neighbor_min.src, "left"
+        ).select(
+            "node",
+            F.least(F.col("label"), F.coalesce("nmin", F.col("label")))
+            .alias("label"),
         )
-        changed = updated.agg(F.sum("chg")).first()[0]
-        labels = updated.drop("chg")
-        if not changed:
-            break
+
+    labels, _rounds = fixpoint(init, propagate, max_rounds=64)
     w = Window.partitionBy("cluster_id")
     return (
         labels.select(

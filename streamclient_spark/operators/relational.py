@@ -4537,8 +4537,8 @@ def q_graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence takes ≤ 8 rounds (measured: 5 at sf0.01, 4 at sf1;
     pinned by a test). Label propagation would need diameter-many
     rounds; star contraction is the 100 TB shape — every round is two
-    min-aggregates plus two co-partitioned joins on the edge list,
-    lineage cut per round, convergence checked by a 1-row checksum."""
+    min-aggregates plus two co-partitioned joins on the edge list, run
+    to the edge-set fixpoint by scale.fixpoint."""
     from streamclient_spark.scale import connected_components_star
 
     e = _copurchase_edges(spark, sf_dir)
@@ -5477,7 +5477,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree < 3 until stable; output the surviving nodes with their
     within-core degree — the dense-subgraph extractor (spam rings,
     community cores; the graph analog of the dedup support floors).
-    The scale.kcore kernel peels to the checksum-detected fixpoint;
+    The scale.kcore kernel peels to the fixpoint (scale.fixpoint);
     the oracle replays the SAME rounds unrolled in SQL (a fixpoint is
     stable under extra rounds, so the margin unroll is safe — the
     q_graph_cc device, convergence pinned by test). Per round: one
@@ -6325,19 +6325,14 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash, the frontier never revisits settled nodes (each node joins
     exactly once), so total work is O(|E|) across all rounds — the
     textbook Pregel BFS in DataFrame form. Rounds are bounded by seed
-    eccentricity (≤6 measured; hubs keep it small-world). Each layer
-    is ``localCheckpoint``-ed: BOTH the next frontier and the
-    settled set embed the previous layer's plan, so without lineage
-    truncation the plan tree DOUBLES per round and Catalyst analysis
+    eccentricity (≤6 measured; hubs keep it small-world) and run on
+    ``scale.fixpoint``, whose per-round lineage cut matters here: every
+    round embeds the previous state twice (frontier and settled set),
+    so without it the plan tree DOUBLES per round and Catalyst analysis
     time goes exponential (measured: 0.8 s → 33 s by round 6 with
-    plain persist; flat ~0.8 s/round checkpointed) — the jobs were
-    never the cost, the plannings were. r12: the checkpoints are LAZY
-    and each layer is materialized by its emptiness COUNT (a global
-    aggregate over every partition — the star-CC materializer device)
-    — one job per round instead of the eager-checkpoint + isEmpty
-    pair. The oracle replays min-relaxation for _BFS_ROUNDS rounds; a
-    convergence test pins the margin (the q_graph_cc /
-    q_graph_kcore rule)."""
+    plain persist; flat ~0.8 s/round checkpointed). The oracle replays
+    min-relaxation for _BFS_ROUNDS rounds; a convergence test pins the
+    margin (the q_graph_cc / q_graph_kcore rule)."""
     dist, adj, _rounds = _bfs_layers(spark, sf_dir)
     hist = dist.groupBy("d").agg(F.count(F.lit(1)).alias("n_nodes"))
     unreached = (
@@ -6359,52 +6354,49 @@ def _bfs_layers(spark: SparkSession, sf_dir: str):
     ``(dist, adj, rounds)``: the settled ``(node, d)`` table, the
     symmetrized adjacency, and the number of expansion rounds to
     fixpoint (tests pin ``rounds <= _BFS_ROUNDS``)."""
+    return _seeded_layers(spark, sf_dir, _BFS_SEEDS, per_seed=False)
+
+
+def _seeded_layers(
+    spark: SparkSession, sf_dir: str, n_seeds: int, per_seed: bool
+):
+    """Layered BFS over the co-purchase graph from its top-``n_seeds``
+    hubs (degree desc, node asc), run on ``scale.fixpoint`` with the
+    settled table as the state and the layer settled last round as the
+    frontier. The seeds form one set (``(node, d)`` rows) or, with
+    ``per_seed``, keep one distance table each (``(s, node, d)``).
+    Returns ``(dist, adj, rounds)``."""
+    from streamclient_spark.scale import fixpoint
+
     e = _copurchase_edges(spark, sf_dir)
     adj = (
         e.select(F.col("u"), F.col("v"))
         .unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .repartition(8, "u")
-        # lazy (r12): materialized by round 1's frontier count — the
-        # blocks are stored identically, one fewer up-front job
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # materialized by round 1
     )
+    keys = ["s"] if per_seed else []
     deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     seeds = (
         deg.orderBy(F.desc("d"), F.asc("u"))
-        .limit(_BFS_SEEDS)
-        .select(F.col("u").alias("node"), F.lit(0).alias("d"))
-        .localCheckpoint(eager=False)
+        .limit(n_seeds)
+        .select(*[F.col("u").alias(k) for k in keys],
+                F.col("u").alias("node"), F.lit(0).alias("d"))
     )
-    dist = seeds
-    frontier = seeds
-    r = 0
-    while True:
-        r += 1
+
+    def expand(dist: DataFrame, r: int) -> DataFrame:
+        frontier = dist.filter(F.col("d") == r - 1)
         nxt = (
-            adj.join(
-                frontier.select(F.col("node").alias("u")),
-                "u",
-            )
-            .select(F.col("v").alias("node"))
+            adj.join(frontier.select(*keys, F.col("node").alias("u")), "u")
+            .select(*keys, F.col("v").alias("node"))
             .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-            .select("node", F.lit(r).alias("d"))
-            # lazy: the count below is a global aggregate over every
-            # partition, so it materializes the layer's blocks exactly
-            # as the eager form did — ONE job per round instead of the
-            # r11 checkpoint-job + isEmpty-probe pair (the star-CC
-            # checksum-materializer device; it must stay a full count,
-            # a take/isEmpty probe would skip partitions)
-            .localCheckpoint(eager=False)
+            .join(dist.select(*keys, "node"), [*keys, "node"], "left_anti")
+            .select(*keys, "node", F.lit(r).alias("d"))
         )
-        if nxt.count() == 0:
-            break
-        # flat union of checkpointed layers — plan grows linearly
-        dist = dist.unionAll(nxt)
-        frontier = nxt
-        if r > 64:  # safety valve; eccentricity is small-world bounded
-            break
-    return dist, adj, r - 1
+        return dist.unionAll(nxt)
+
+    dist, rounds = fixpoint(seeds, expand, max_rounds=64)
+    return dist, adj, rounds
 
 
 # ---------------------------------------------------------------------------
@@ -9982,13 +9974,10 @@ def q_graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-partitioned adjacency, a distinct, and an anti-join against
     the settled (seed, node) set, every step riding the node hash.
     Each node is settled at most once PER SEED, so total work is
-    O(seeds·|E|) across all rounds; layers are lazily
-    localCheckpoint-ed and materialized by the per-round frontier
-    count (r12 — one job per round instead of the checkpoint +
-    isEmpty pair; the q_graph_bfs lineage-doubling lesson still
-    holds: the lazy cut bounds Catalyst the same). The oracle unrolls
-    {_CLOSE_ROUNDS} relaxation rounds; a convergence test pins the
-    engine fixpoint within that margin."""
+    O(seeds·|E|) across all rounds; the rounds run on
+    ``scale.fixpoint`` (the q_graph_bfs lineage-doubling lesson holds
+    here too). The oracle unrolls {_CLOSE_ROUNDS} relaxation rounds; a
+    convergence test pins the engine fixpoint within that margin."""
     dist, _rounds = _closeness_layers(spark, sf_dir)
     return dist.groupBy(F.col("s").alias("seed")).agg(
         F.count(F.lit(1)).cast("long").alias("n_reached"),
@@ -10005,45 +9994,10 @@ def _closeness_layers(spark: SparkSession, sf_dir: str):
     ``(dist, rounds)``: the settled (s, node, d) table and the number
     of expansion rounds to fixpoint (tests pin
     ``rounds <= _CLOSE_ROUNDS``)."""
-    e = _copurchase_edges(spark, sf_dir)
-    adj = (
-        e.select(F.col("u"), F.col("v"))
-        .unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition(8, "u")
-        .localCheckpoint(eager=False)  # materialized by round 1's count
+    dist, _adj, rounds = _seeded_layers(
+        spark, sf_dir, _CLOSE_SEEDS, per_seed=True
     )
-    deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    seeds = (
-        deg.orderBy(F.desc("d"), F.asc("u"))
-        .limit(_CLOSE_SEEDS)
-        .select(F.col("u").alias("s"), F.col("u").alias("node"),
-                F.lit(0).alias("d"))
-        .localCheckpoint(eager=False)
-    )
-    dist = seeds
-    frontier = seeds
-    r = 0
-    while True:
-        r += 1
-        nxt = (
-            adj.join(
-                frontier.select("s", F.col("node").alias("u")), "u"
-            )
-            .select("s", F.col("v").alias("node"))
-            .distinct()
-            .join(dist.select("s", "node"), ["s", "node"], "left_anti")
-            .select("s", "node", F.lit(r).alias("d"))
-            # lazy: the full count below materializes the layer's
-            # blocks (global aggregate — must not become take/isEmpty)
-            .localCheckpoint(eager=False)
-        )
-        if nxt.count() == 0:
-            break
-        dist = dist.unionAll(nxt)
-        frontier = nxt
-        if r > 64:  # safety valve; small-world bounded
-            break
-    return dist, r - 1
+    return dist, rounds
 
 
 # ---------------------------------------------------------------------------

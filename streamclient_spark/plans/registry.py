@@ -61,6 +61,12 @@ def register(name: str, oracle: Optional[str] = None) -> Callable[[Builder], Bui
 # first 50 registry entries in insertion order. Rotated every round — see the
 # segment comments inside the tuple.
 DRIVER_PRIORITY: tuple[str, ...] = (
+    # --- lead: the seven consumers of scale.fixpoint (the star-CC,
+    # k-core, BFS, closeness and dedup-cluster loops now share one
+    # convergence helper; results identical to the parent, A/B in
+    # CHANGES.md). Names removed from their old positions below.
+    "q_graph_cc", "q_graph_kcore", "q_graph_bfs", "q_graph_closeness",
+    "q_dedup_cluster", "q_dedup_canonical", "q_dedup_semantic",
     # --- ROUND-12 WINDOW (first 50) — second optimization round.
     # Ledger state entering round 12: r1∪…∪r11 covers all 295
     # registered queries, 290 hash-green + 5 rows-only by contract,
@@ -87,10 +93,8 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # the chunked star-CC/kcore kernels (two rounds per
     # materialization+checksum job) and the lazy-checkpoint loop
     # cadence in BFS/closeness/label-prop/dedup-cluster
-    # (tools/ab_starcc.py; OPTIMIZATION_r12.md §4):
-    "q_graph_cc", "q_graph_kcore", "q_dedup_semantic",
-    "q_dedup_cluster", "q_dedup_canonical",
-    "q_graph_bfs", "q_graph_closeness", "q_graph_label_prop",
+    # (tools/ab_starcc.py at commit 20e3a11; OPTIMIZATION_r12.md §4):
+    "q_graph_label_prop",
     "q_pareto_abc",
     # (c) re-attests of standing greens from the r11 window fill the
     # remaining slots:
@@ -122,7 +126,7 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # / q_dedup_semantic (the star-CC and kcore kernels now materialize
     # their per-round checkpoint via the convergence checksum — one job
     # per round instead of two, fixpoint and labels identical; A/B
-    # tools/ab_starcc.py);
+    # tools/ab_starcc.py at commit 20e3a11);
     # q_join_lateral (rides the memoized sqlapi.register_views — code
     # path changed, results unchanged).
     # (a) modified in the round-11 build phase after a prior green row:

@@ -36,7 +36,9 @@ double-counts rows. We use ``pmod(xxhash64(cols...), n)``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 SALT_COL = "__salt"
@@ -282,7 +284,9 @@ def _place_by_bounds(
     property the old form needed a localCheckpoint to enforce).
     Bounds are split on the value column only (ties of a hot value
     share a bucket — the probe-accuracy skew bound documented on the
-    callers); balance comes from the percentile sketch.
+    callers); balance comes from the percentile sketch. With more
+    groups than ``num_partitions``, the layout widens to one partition
+    per group.
 
     Returns ``(placed, sort_cols, groups, n)``: ``placed`` is the
     repartitioned frame (+ ``__pid``/``__pk``), lazily
@@ -344,6 +348,10 @@ def _place_by_bounds(
         r = df.agg(pct, cnt).first()
         probe = [(None, list(r["q"] or []), int(r["c"]))]
 
+    # every group needs a bucket of its own and every bucket a
+    # partition of its own (the rank offsets are per partition), so
+    # more groups than partitions widen the layout
+    n = max(n, len(probe))
     total = sum(c for _, _, c in probe) or 1
     groups: list[tuple] = []
     cases: list[str] = []
@@ -651,6 +659,56 @@ def ntile_from_rank(rank: Column, n_total: Column, k: int) -> Column:
     return F.when(in_head, bucket_head).otherwise(bucket_tail).cast("int")
 
 
+def fixpoint(
+    init: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    max_rounds: int,
+) -> tuple[DataFrame, int]:
+    """Iterate ``state = step(state, r)`` for ``r = 1, 2, ...`` until a
+    round leaves the state unchanged; return ``(state, rounds)``.
+
+    The one materialization and convergence policy of the converging
+    kernels (star-CC, k-core, layered BFS/closeness, dedup label
+    propagation). ``init`` and every round's result are lazily
+    ``localCheckpoint``-ed: the cut bounds Catalyst's re-analysis to one
+    round of plan and schedules no job of its own. The round's state
+    is materialized by its convergence checksum — ONE global aggregate,
+    row count plus a decimal(38,0) sum of ``xxhash64`` over all columns
+    (a long sum of 64-bit hashes overflows), observed on a no-op write
+    of the state. The write computes every partition into the
+    checkpoint and the observed metrics fold the checksum into that
+    same result stage, so a round costs one job beyond its step's own
+    shuffles (a plain ``agg`` adds a shuffle-map job under AQE), and a
+    result stage counts each partition once, retries included. The
+    checksum must cover every partition: a partition-skipping probe
+    (``isEmpty``/``take``) would leave the checkpoint to a second job. A
+    checksum collision (~2⁻⁶⁴) could only stop the loop one round early.
+
+    ``init`` is never checksummed, so the loop stops at the first round
+    whose checksum repeats its predecessor's. ``rounds`` counts the
+    rounds before that one — the rounds that changed the state (round 1
+    is counted even if ``init`` was already a fixpoint). Up to
+    ``max_rounds + 1`` steps run; if ``max_rounds`` rounds all change
+    the state, it raises ``RuntimeError``: a kernel never returns a
+    partial result."""
+    state = init.localCheckpoint(eager=False)
+    prev = None
+    for r in range(1, max_rounds + 2):
+        state = step(state, r).localCheckpoint(eager=False)
+        obs = Observation()
+        state.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.xxhash64(*state.columns).cast("decimal(38,0)")).alias("h"),
+        ).write.format("noop").mode("overwrite").save()
+        m = obs.get
+        sig = (m["n"], m["h"])
+        if sig == prev:
+            return state, r - 1
+        prev = sig
+    raise RuntimeError(f"no fixpoint within max_rounds={max_rounds}")
+
+
 def connected_components_star(
     edges: DataFrame,
     src: str = "src",
@@ -680,64 +738,23 @@ def connected_components_star(
 
     Both are one partial+final min-aggregate plus one co-partitioned
     join on the grouping key — the same per-round plan shape as label
-    propagation, just O(log n) rounds instead of O(diameter).
-    ``localCheckpoint`` cuts lineage per round. Convergence = edge-set
-    fixpoint, tested by (count, xxhash64-sum) checksum — one tiny
-    aggregate per round; a checksum collision (~2⁻⁶⁴) could only end
-    the loop one round early on an unconverged-but-colliding state.
-
-    r11: the per-round checkpoint is LAZY and is materialized by the
-    checksum aggregate itself — the checksum touches every partition,
-    so the blocks are stored exactly as the eager form stored them,
-    but each round launches ONE job instead of two (measured on
-    q_graph_cc: 62 → 57 jobs end-to-end, labels identical;
-    tools/ab_starcc.py).
-
-    r12 (VERDICT r11 #8): TWO alternating-star rounds run per
-    materialization+checksum job — the inner round is left lazy (its
-    repeated ``e`` subtrees dedupe at runtime through exchange reuse;
-    plan depth stays bounded at two rounds) and convergence is tested
-    at chunk ends. Soundness of the distance-2 equality test: the
-    algorithm's potential (Kiveris et al. §3 — the sum of parent
-    labels) STRICTLY decreases on every non-fixpoint round, so
-    ``e_{2k} == e_{2k-2}`` is only possible when both intervening
-    rounds were already at the fixpoint — a 2-cycle cannot exist.
-    Detection granularity is 2 rounds, so the loop can run up to two
-    rounds PAST the fixpoint — value-identical by the same stability
-    argument the oracle's fixed 8-round unroll uses (a fixpoint edge
-    set is invariant under further rounds, and fixpoint-round passes
-    are the cheapest of the run), in exchange for half the
-    driver-scheduled jobs per round.
+    propagation, just O(log n) rounds instead of O(diameter). The
+    rounds run on :func:`fixpoint` (convergence = edge-set fixpoint).
 
     Returns ``(labels, rounds)``: labels is ``(node, label)`` with
     label = the component's minimum node id (roots label themselves);
-    ``rounds`` counts executed rounds (chunk granularity — it may
-    overshoot the exact fixpoint round by up to two).
+    ``rounds`` is :func:`fixpoint`'s count of edge-set-changing rounds.
     """
-    e = (
+    init = (
         edges.select(
             F.greatest(F.col(src), F.col(dst)).alias("a"),
             F.least(F.col(src), F.col(dst)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=False)  # materialized by the checksum
     )
 
-    def checksum(df: DataFrame):
-        # This aggregate DOUBLES as the lazy checkpoint's materializer
-        # (the one-job-per-round device, r11): it must stay a GLOBAL
-        # aggregate that touches every partition — a partition-skipping
-        # probe (isEmpty/take) would silently reintroduce the second
-        # materialization job without breaking results (ADVICE r11).
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38,0) sum: a long sum of 64-bit hashes overflows
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        return row["n"], row["h"]
-
-    def star_round(e: DataFrame) -> DataFrame:
+    def star_round(e: DataFrame, _r: int) -> DataFrame:
         # large-star over the symmetric neighborhood
         sym = e.select("a", "b").union(
             e.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -764,17 +781,7 @@ def connected_components_star(
             .distinct()
         )
 
-    sig = checksum(e)
-    rounds = 0
-    while rounds < max_rounds:
-        # two rounds per chunk; only the chunk end is checkpointed
-        # (lazy) and checksummed — one job per TWO rounds
-        e = star_round(star_round(e)).localCheckpoint(eager=False)
-        rounds += 2
-        new_sig = checksum(e)
-        if new_sig == sig:
-            break
-        sig = new_sig
+    e, rounds = fixpoint(init, star_round, max_rounds)
 
     # fixpoint edges are stars onto component minima; roots label
     # themselves
@@ -1141,31 +1148,18 @@ def kcore(
 
     Per round: one partial+final count aggregate (degrees) and two
     semi-joins of the edge list against the surviving-node set — the
-    same per-round plan shape as the star-CC half-steps, with
-    ``localCheckpoint`` cutting lineage and a (count, hash-sum)
-    checksum detecting the fixpoint in one tiny aggregate. Peeling
-    converges in O(rounds-to-stable) — typically a handful on real
-    graphs because most sub-core nodes fall in the first rounds."""
+    same per-round plan shape as the star-CC half-steps — run on
+    :func:`fixpoint`. Peeling converges in O(rounds-to-stable) —
+    typically a handful on real graphs because most sub-core nodes
+    fall in the first rounds. A partially-peeled graph is NOT a k-core,
+    so an exhausted ``max_rounds`` raises (fixpoint's contract)."""
     sym = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).unionAll(
         edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
     )
-    # lazy checkpoints, materialized by the checksum aggregate (the
-    # star-CC r11 device: one job per round instead of two)
-    e = sym.distinct().localCheckpoint(eager=False)
 
-    def checksum(df: DataFrame):
-        # Doubles as the lazy checkpoint's materializer — must stay a
-        # global aggregate over every partition (see the star-CC
-        # checksum note; ADVICE r11).
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        return row["n"], row["h"]
-
-    def peel(e: DataFrame) -> DataFrame:
+    def peel(e: DataFrame, _r: int) -> DataFrame:
         keep = (
             e.groupBy("u")
             .agg(F.count(F.lit(1)).alias("d"))
@@ -1176,30 +1170,7 @@ def kcore(
             keep.withColumnRenamed("node", "u"), "u", "left_semi"
         ).join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
 
-    sig = checksum(e)
-    rounds = 0
-    converged = False
-    while rounds < max_rounds:
-        # r12 (the star-CC chunk device): two peels per
-        # materialization+checksum job. Peeling only ever SHRINKS the
-        # edge set, so checksum equality at distance 2 implies both
-        # intermediate rounds were already the fixpoint — no overrun
-        # ambiguity at all here, just half the jobs per round.
-        e = peel(peel(e)).localCheckpoint(eager=False)
-        rounds += 2
-        new_sig = checksum(e)
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if not converged:
-        # A partially-peeled graph is NOT a k-core; callers must never
-        # see one silently (ADVICE r4). Peeling rounds are bounded by
-        # the peel depth, so a real graph exhausting the budget means
-        # the budget is wrong — fail loudly.
-        raise RuntimeError(
-            f"kcore did not reach a fixpoint within max_rounds={max_rounds}"
-        )
+    e, rounds = fixpoint(sym.distinct(), peel, max_rounds)
 
     nodes = e.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).alias("core_deg")

@@ -7,6 +7,7 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from streamclient_spark.scale import (
@@ -193,6 +194,26 @@ def test_ranked_by_range_matches_window_row_number(spark, sf_oracle):
     assert "broadcasthashjoin" not in plan
 
 
+def test_ranked_by_range_more_groups_than_partitions(spark):
+    """Six groups on four partitions: every group still gets a bucket
+    and a partition of its own, and the ranks equal the plain sorted
+    positions (the layout used to allocate more buckets than partition
+    representatives and failed the placement lookup)."""
+    from streamclient_spark.scale import ranked_by_range
+
+    rows = [(g, (7 * i + 3 * g) % 11, 100 * g + i)
+            for g in range(6) for i in range(5)]
+    df = spark.createDataFrame(rows, "g int, v long, id long")
+    got = {
+        r["id"]: r["rank"]
+        for r in ranked_by_range(
+            df, ["g", "v", "id"], group_col="g", num_partitions=4
+        ).collect()
+    }
+    want = {row[2]: i + 1 for i, row in enumerate(sorted(rows))}
+    assert got == want
+
+
 def test_running_sum_by_range_matches_global_window(spark, sf_oracle):
     """The distributed running-sum decomposition must reproduce the
     single-task global running-sum window exactly over a total order
@@ -353,6 +374,51 @@ def test_star_cc_long_path_converges_fast(spark):
     assert len(rows) == 31
     assert all(r["label"] == 0 for r in rows)
     assert rounds <= 12
+
+
+@pytest.mark.parametrize("n_nodes, exact", [(31, 5), (16, 4)])
+def test_star_cc_round_budget_is_exact(spark, n_nodes, exact):
+    # fixpoint's budget contract through its star-CC consumer: a budget
+    # equal to the exact round count succeeds and reports that count,
+    # one less raises. The two paths cover an odd and an even budget (a
+    # kernel checking convergence every second round overshot odd ones).
+    from streamclient_spark.scale import connected_components_star
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n_nodes - 1)], "src long, dst long"
+    )
+    labels, rounds = connected_components_star(edges, max_rounds=exact)
+    assert rounds == exact
+    assert {r["label"] for r in labels.collect()} == {0}
+    with pytest.raises(RuntimeError, match="max_rounds"):
+        connected_components_star(edges, max_rounds=exact - 1)
+
+
+def test_fixpoint_job_cadence(spark):
+    # The materialization cadence, pinned in jobs: each round is ONE
+    # job, the checksummed no-op write that also materializes the
+    # round's lazy checkpoint; init is never checksummed. A narrow step
+    # adds no jobs of its own, so any cadence edit (an up-front
+    # checksum, an eager checkpoint, a second probe per round) changes
+    # this count. Same count at 2 and 4 local cores.
+    from streamclient_spark.scale import fixpoint
+
+    sc = spark.sparkContext
+    init = spark.createDataFrame([(i,) for i in range(4)], "v long")
+
+    def step(df, _r):
+        return df.select(F.greatest(F.col("v") - 1, F.lit(0)).alias("v"))
+
+    sc.setJobGroup("fixpoint-cadence", "fixpoint cadence test")
+    try:
+        state, rounds = fixpoint(init, step, max_rounds=10)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("fixpoint-cadence")
+    assert rounds == 3  # values 0..3 reach 0 in three rounds
+    assert len(jobs) == rounds + 1 == 4
+    assert [r["v"] for r in state.collect()] == [0, 0, 0, 0]
 
 
 def test_star_cc_matches_label_propagation(spark, sf_oracle):
